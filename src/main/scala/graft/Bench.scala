@@ -476,8 +476,11 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
     // stop() BEFORE the println so the contract line is the program's
-    // last stdout — nothing can land after it in the driver's tail.
-    spark.stop()
+    // last stdout — nothing can land after it in the driver's tail. A
+    // failing stop() must not swallow the line the run exists to print.
+    try spark.stop()
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(slimLine)
   }
 }

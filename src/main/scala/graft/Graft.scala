@@ -161,22 +161,24 @@ object Graft {
     Dedup.simhashPairsBlocked(sig, idCol, maxHamming, bits)
   }
 
-  // ---- fused "all detectors" signature surface ----
+  // ---- one-pass "all detectors" signature surface ----
   // Each single-detector method above scans the corpus once; running
   // several detectors that way scans it once PER DETECTOR — the dominant
-  // cost at 100 TB. The fused family computes every signature in one
-  // shingle pass; persist (or localCheckpoint) the result and derive each
-  // detector's view from it without touching the corpus again.
+  // cost at 100 TB. The signature table below holds every detector's
+  // signature, one row per doc, from one row-local pass; persist (or
+  // localCheckpoint) it and derive each detector's view from it without
+  // touching the corpus again.
 
   /** One-scan signature table (idCol, `sig array<long>` minhash family,
-    * `simhash long`) — bit-identical to the separate
+    * `simhash long`), computed in-row per doc ([[Dedup.docSignatures]]) —
+    * bit-identical to [[Dedup.fusedSignatures]] and the separate
     * [[Dedup.minhashSignatures]]/[[Dedup.simhash]] passes (spec-pinned).
     * One row per doc: cheap to persist, tiny next to the corpus.
     */
   def corpusSignatures(docs: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 8, bits: Int = 60): DataFrame =
-    Dedup.fusedSignatures(Dedup.shingles(docs, idCol, textCol), idCol,
-      numHashes, bits)
+    Dedup.docSignatures(docs, idCol, textCol, numHashes = numHashes,
+      bits = bits)
   /** Banded-minhash candidate pairs from a [[corpusSignatures]] frame. */
   def minhashCandidatesFromSignatures(fused: DataFrame,
                                       idCol: String): DataFrame = {
@@ -254,37 +256,20 @@ object Graft {
                             emb: DataFrame, embIdCol: String, arrCol: String,
                             centersLong: DataFrame, centerCol: String,
                             cosineThreshold: Double = 0.9): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val hashed = docs.select(col(idCol), md5(col(textCol)).as("_h"))
-    val exact = hashed.select(col(idCol).as("id_a"), col("_h"))
-      .join(hashed.select(col(idCol).as("id_b"), col("_h")), "_h")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit("exact").as("src"))
-    // Fused signature pass — minhash + simhash from ONE corpus scan,
-    // persisted so neither consumer re-reads the corpus: the cache is one
-    // row per doc (id + 8 longs + 1 long), ~tens of GB per 10^10 docs —
-    // cheap next to a second 100 TB scan. (Without persist Catalyst
-    // prunes the aggregate per branch and scans twice.)
-    val fused = Dedup.fusedSignatures(
-      Dedup.shingles(docs, idCol, textCol), idCol, bits = 60).persist()
-    val near = Dedup.minhashBandCandidates(
-        fused.select(col(idCol),
-          posexplode(col("sig")).as(Seq("h", "minhash"))), idCol)
-      .select(col("id_a"), col("id_b"), lit("minhash").as("src"))
-    val sim = Dedup.simhashPairsBlocked(
-        fused.select(col(idCol), col("simhash")), idCol,
-        maxHamming = 3, bits = 60)
-      .select(col("id_a"), col("id_b"), lit("simhash").as("src"))
-    val cos = Dedup.embeddingNearDupCells(emb, embIdCol, arrCol,
-        centersLong, centerCol, cosineThreshold)
-      .select(col("id_a"), col("id_b"), lit("cosine").as("src"))
+    // In-row signature pass — minhash + simhash from ONE corpus scan with
+    // no shuffle, persisted so neither the minhash nor the simhash
+    // detector re-reads the corpus: one row per doc (id + 8 longs +
+    // 1 long), ~tens of GB per 10^10 docs — cheap next to a second
+    // 100 TB scan.
+    val sigs = Dedup.docSignatures(docs, idCol, textCol, bits = 60).persist()
     val clusters = graft.dedup.Components.provenanceClusters(
-      exact.unionByName(near).unionByName(sim).unionByName(cos))
+      Dedup.provenanceEdges(docs, idCol, textCol, sigs, emb, embIdCol,
+        arrCol, centersLong, centerCol, cosineThreshold))
     // provenanceClusters eagerly localCheckpoints the edge set, so the
-    // fused cache has served its purpose — release it rather than letting
-    // repeated calls accumulate cached signature tables for the session's
-    // lifetime
-    fused.unpersist()
+    // signature cache has served its purpose — release it rather than
+    // letting repeated calls accumulate cached signature tables for the
+    // session's lifetime
+    sigs.unpersist()
     clusters
   }
   /** Hourly resample with dense grid + forward fill (time-series

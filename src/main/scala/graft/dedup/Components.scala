@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components over candidate-pair edges — the cluster-resolution
   * step of a dedup pipeline: near-duplicate PAIRS (from banding, simhash
@@ -62,16 +63,22 @@ object Components {
       .orElse(sys.env.get("GRAFT_ADJ_PARTITION_THRESHOLD"))
       .map(_.toLong).getOrElse(1000000L)
 
-  /** Adjacency-row count (2×edges after dedup) BELOW which the label
-    * loop is replaced by a driver-side union-find over the collected
-    * edge list (r22, the r21-deferred rung): a bench-scale graph
-    * (thousands of edges) pays ~25 SEQUENTIAL 1-task barrier stages —
-    * join + groupBy + 2 joins + observe + eager checkpoint per round —
-    * where the same fixpoint is microseconds of driver CPU on a
-    * ≤32 MB collect. Above the threshold the checkpointed loop (the
-    * 100 TB path) runs unchanged — StressBench's 20M-edge stage never
-    * sees the driver path. The collect is bounded by construction:
-    * threshold × 16 bytes ≤ ~32 MB against the 8g driver heap.
+  /** Edge count BELOW which components are resolved on the driver from
+    * one collect of the edge list instead of the distributed label loop:
+    * adjacency rows (2×edges after dedup) in [[connectedComponents]],
+    * tagged edges in [[provenanceClusters]]. A bench-scale graph
+    * (thousands of edges) otherwise pays ~25 SEQUENTIAL 1-task barrier
+    * stages — join + groupBy + 2 joins + observe + eager checkpoint per
+    * round — where the same fixpoint is microseconds of driver CPU.
+    * Above the threshold the checkpointed loop (the 100 TB path) runs
+    * unchanged — StressBench's 20M-edge stage never sees the driver
+    * path. Driver memory is bounded by the threshold: edges arrive as
+    * primitive columns ([[collectEdges]]: 16 B per edge, 20 B with a
+    * tag); merging the per-partition chunks and sorting the endpoints
+    * ([[driverUnionFind]]) each peak at about twice that, plus 16 B per
+    * node and then one result row per node. At 2M edges (≤ 4M nodes)
+    * that is ~80 MB of columns and a few hundred MB of result rows,
+    * well inside the 8g driver heap.
     * Tunable via -Dgraft.components.driverUfThreshold (tests pin both
     * paths against each other through it).
     */
@@ -80,47 +87,99 @@ object Components {
       .orElse(sys.env.get("GRAFT_DRIVER_UF_THRESHOLD"))
       .map(_.toLong).getOrElse(2000000L)
 
-  /** Driver-side min-label union-find over a collected (src, dst)
-    * adjacency — the exact fixpoint [[connectedComponents]]'s loop
-    * reaches: comp(id) = min node id reachable from id. Path-halving
-    * find + union by min root keeps the forest shallow; the final pass
-    * maps every node to its root's minimum member, which IS the root
-    * (roots are always the minimum of their tree by the union rule).
+  /** Edges as primitive columns: (a(i), b(i)) with detector tag
+    * `names(tag(i))` (-1 = null tag; `tag` is empty for untagged edges).
+    * One per partition on the executors (names = that partition's own
+    * dictionary); [[collectEdges]] merges them into one on the driver.
     */
-  private def driverUnionFind(adj: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long](adj.length * 2)
-    def find(x0: Long): Long = {
+  private final case class EdgeColumns(a: Array[Long], b: Array[Long],
+                                       tag: Array[Int], names: Array[String])
+
+  /** The edges of `df` — (long, long) or (long, long, string tag) — on
+    * the driver as [[EdgeColumns]], in ONE job: each partition packs its
+    * rows into primitive arrays (tags dictionary-coded to small ints), so
+    * the driver never holds a boxed row or tuple per edge. Merged tag
+    * names are sorted in `sort_array` (UTF-8 byte) order, so ascending
+    * tag ids list names the way the distributed path does.
+    */
+  private def collectEdges(df: DataFrame): EdgeColumns = {
+    val tagged = df.schema.length > 2
+    val chunks = df.rdd.mapPartitions { rows =>
+      val a = Array.newBuilder[Long]
+      val b = Array.newBuilder[Long]
+      val t = Array.newBuilder[Int]
+      val dict = new java.util.HashMap[String, Integer]()
+      rows.foreach { r =>
+        a += r.getLong(0)
+        b += r.getLong(1)
+        if (tagged) t += (if (r.isNullAt(2)) -1
+          else dict.computeIfAbsent(r.getString(2), _ => dict.size).intValue)
+      }
+      val names = new Array[String](dict.size)
+      dict.forEach((k, v) => names(v) = k)
+      Iterator(EdgeColumns(a.result(), b.result(), t.result(), names))
+    }.collect()
+    val names = chunks.flatMap(_.names).distinct.sortWith((x, y) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0)
+    val global = names.zipWithIndex.toMap
+    val n = chunks.map(_.a.length).sum
+    val a = new Array[Long](n)
+    val b = new Array[Long](n)
+    val tag = new Array[Int](if (tagged) n else 0)
+    var off = 0
+    chunks.foreach { c =>
+      System.arraycopy(c.a, 0, a, off, c.a.length)
+      System.arraycopy(c.b, 0, b, off, c.b.length)
+      var i = 0
+      while (i < c.tag.length) {
+        tag(off + i) = if (c.tag(i) < 0) -1 else global(c.names(c.tag(i)))
+        i += 1
+      }
+      off += c.a.length
+    }
+    EdgeColumns(a, b, tag, names)
+  }
+
+  /** Driver-side min-label union-find over edge columns (a(i), b(i)) —
+    * the exact fixpoint [[connectedComponents]]'s loop reaches:
+    * comp(id) = min node id reachable from id. Nodes are relabeled to
+    * dense indices over the sorted distinct endpoints, so the forest is
+    * one int array; path-halving find + union by min root keeps it
+    * shallow, and a root is always the minimum index — the minimum id —
+    * of its tree. Returns (ids ascending, root index per node).
+    */
+  private def driverUnionFind(a: Array[Long],
+                              b: Array[Long]): (Array[Long], Array[Int]) = {
+    val ids = {
+      val all = java.util.Arrays.copyOf(a, a.length + b.length)
+      System.arraycopy(b, 0, all, a.length, b.length)
+      java.util.Arrays.sort(all)
+      var n = 0
+      var i = 0
+      while (i < all.length) {
+        if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(all, n)
+    }
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
-        x = gp
-        p = parent.getOrDefault(x, x)
+      while (parent(x) != x) { // path halving
+        parent(x) = parent(parent(x))
+        x = parent(x)
       }
       x
     }
     var i = 0
-    while (i < adj.length) {
-      val (a, b) = adj(i)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { // min id becomes the root → root = min of its tree
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
+    while (i < a.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, a(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, b(i)))
+      // min index becomes the root → root = min of its tree
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       i += 1
     }
-    // node set = every endpoint (adjacency carries both directions, so
-    // every node appears as src; dst included for safety at zero cost)
-    val seen = new java.util.HashSet[Long](adj.length * 2)
-    val out = Array.newBuilder[(Long, Long)]
-    i = 0
-    while (i < adj.length) {
-      val (a, b) = adj(i)
-      if (seen.add(a)) out += ((a, find(a)))
-      if (seen.add(b)) out += ((b, find(b)))
-      i += 1
-    }
-    out.result()
+    (ids, Array.tabulate(ids.length)(find))
   }
 
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
@@ -167,12 +226,13 @@ object Components {
     if (nAdjRows < driverUfThreshold) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val labels = driverUnionFind(
-        adjBase.select(col("src"), col("dst")).as[(Long, Long)].collect())
+      val adj = collectEdges(adjBase.select(col("src"), col("dst")))
+      val (ids, root) = driverUnionFind(adj.a, adj.b)
       checkpointRdd(adjBase).foreach(_.unpersist(blocking = true))
       onRounds(0) // no distributed rounds ran
       return spark.createDataset(
-        spark.sparkContext.parallelize(labels.toIndexedSeq,
+        spark.sparkContext.parallelize(
+          ids.indices.map(i => (ids(i), ids(root(i)))),
           math.max(1, spark.sparkContext.defaultParallelism / 4)))
         .toDF("id", "comp")
     }
@@ -316,12 +376,17 @@ object Components {
     * distinct detector tags (e.g. "exact,minhash") whose edges touch the
     * cluster. Which detector found a duplicate matters operationally
     * (exact is certain, cosine is a judgment call), so the tag set rides
-    * with every cluster instead of being lost in the union.
+    * with every cluster instead of being lost in the union. Output:
+    * (id long, comp long, is_survivor int, cluster_size long,
+    * sources string), one row per node.
     *
-    * Scale: provenance aggregation is one distinct + groupBy on
-    * (comp, src) — O(edges) with tiny cardinality per group — and the
-    * cluster-size window and source join both shuffle on comp, the same
-    * key the components loop already used.
+    * Below [[driverUfThreshold]] tagged edges the clusters are resolved
+    * on the driver from one collect of the checkpointed edges and
+    * returned as a local frame; above it (the 100 TB path) the
+    * distributed loop runs, and provenance aggregation is one distinct +
+    * groupBy on (comp, src) — O(edges) with tiny cardinality per group —
+    * while the cluster-size window and source join both shuffle on comp,
+    * the same key the components loop already used.
     */
   def provenanceClusters(edgesProv: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -332,16 +397,22 @@ object Components {
     // localCheckpoint(eager), not a lazy persist (r22, Drill-measured):
     // the consumers launch several jobs whose subtrees all reference
     // this frame, and racing a lazy persist they re-ran the whole
-    // four-detector union up to 5x (the 97-task union map stage
-    // appeared five times per execution, each dragging a multi-second
-    // task-binary deserialization of the giant detector plan). Eager =
-    // one detector pass; the truncated lineage also shrinks every
-    // later consumer's task binary to a LogicalRDD scan. Blocks land
-    // at the AQE-coalesced width and Caches.release frees them via the
-    // plan's LogicalRDD leaf.
-    val edges = graft.core.Caches.track(
-      edgesProv.localCheckpoint(eager = true,
-        storageLevel = StorageLevel.DISK_ONLY))
+    // four-detector union up to 5x. Eager = one detector pass; the
+    // truncated lineage also shrinks every later consumer's task binary
+    // to a LogicalRDD scan. The edge count rides the same job (observe),
+    // so choosing the driver path costs no extra job.
+    val obs = org.apache.spark.sql.Observation()
+    val edges = edgesProv
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
+    if (obs.get("n").asInstanceOf[Long] < driverUfThreshold) {
+      val out = driverProvenance(edges)
+      checkpointRdd(edges).foreach(_.unpersist(blocking = false))
+      return out
+    }
+    // Blocks land at the AQE-coalesced width and Caches.release frees
+    // them via the plan's LogicalRDD leaf.
+    graft.core.Caches.track(edges)
     val comp = dedupClusters(
       edges.select(col("id_a"), col("id_b")).distinct(), "id_a", "id_b")
     val clusterSrc = edges
@@ -355,5 +426,37 @@ object Components {
       .join(clusterSrc, "comp")
       .select(col("id"), col("comp"), col("is_survivor"),
         col("cluster_size"), col("sources"))
+  }
+
+  /** [[provenanceClusters]] resolved on the driver: one collect of the
+    * tagged edges as primitive columns, [[driverUnionFind]], then per
+    * cluster its size and the set of tag ids (ascending tag id = sorted
+    * name, so `sources` reads as the distributed path's
+    * sort_array(collect_set(src))). A null src tags nothing, as
+    * collect_set skips nulls. Returns a local frame ordered by id.
+    */
+  private def driverProvenance(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = collectEdges(edges.select(col("id_a").cast("long"),
+      col("id_b").cast("long"), col("src").cast("string")))
+    val (ids, root) = driverUnionFind(e.a, e.b)
+    val size = new Array[Long](ids.length)
+    root.foreach(r => size(r) += 1)
+    // an edge's tag goes to its endpoints' cluster (both share it)
+    val tags = new Array[java.util.BitSet](ids.length)
+    var i = 0
+    while (i < e.a.length) {
+      val r = root(java.util.Arrays.binarySearch(ids, e.a(i)))
+      if (tags(r) == null) tags(r) = new java.util.BitSet(e.names.length)
+      if (e.tag(i) >= 0) tags(r).set(e.tag(i))
+      i += 1
+    }
+    val sources = tags.map(t => if (t == null) null
+      else t.stream().toArray.map(e.names(_)).mkString(","))
+    ids.indices.map { i =>
+      val r = root(i)
+      (ids(i), ids(r), if (r == i) 1 else 0, size(r), sources(r))
+    }.toDF("id", "comp", "is_survivor", "cluster_size", "sources")
   }
 }

@@ -2,7 +2,6 @@ package graft.dedup
 
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -148,17 +147,46 @@ object Dedup {
   }
 
   /** Whole minhash signature computed IN-ROW (one `array<long>` per doc,
-    * no aggregation): shingle lambda → native seeded-md5 family per
-    * shingle → elementwise-min fold. Values are bit-identical to the
-    * aggregated [[minhashSignatures]] (spec-pinned); the shape matters
-    * because a per-row plan carries NO state — it runs unchanged on a
-    * STREAMING frame, which a groupBy signature cannot (unbounded
-    * aggregation state). The signature path for stream-side docs in
-    * [[nearDupAgainstIndex]].
+    * no aggregation): [[docSignatures]] without the simhash vote. Values
+    * are bit-identical to the aggregated [[minhashSignatures]]
+    * (spec-pinned); the shape matters because a per-row plan carries NO
+    * state — it runs unchanged on a STREAMING frame, which a groupBy
+    * signature cannot (unbounded aggregation state). The signature path
+    * for stream-side docs in [[nearDupAgainstIndex]].
     */
   def inRowSignature(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 3, numHashes: Int = 8,
-                     passthroughCols: Seq[String] = Nil): DataFrame = {
+                     passthroughCols: Seq[String] = Nil): DataFrame =
+    withDocSignature(docs, idCol, textCol, n, numHashes, 0, passthroughCols)
+      .select(col(idCol) +: passthroughCols.map(col) :+
+        col("_ds.sig").as("sig"): _*)
+
+  /** One signature row per doc — (idCol, `sig array<long>` minhash
+    * family, `simhash long`) — computed in-row by the native
+    * `graft_doc_signature` kernel over the doc's distinct shingles: no
+    * shingle explode, no per-doc aggregate, no exchange. Bit-identical
+    * to [[fusedSignatures]] over [[shingles]] (same hashes, same
+    * `sum(±1) > 0` vote; spec-pinned). Docs with fewer than `n` tokens
+    * have no shingles and no row, as in [[shingles]].
+    */
+  def docSignatures(docs: DataFrame, idCol: String, textCol: String,
+                    n: Int = 3, numHashes: Int = 8,
+                    bits: Int = 60): DataFrame = {
+    require(bits % 4 == 0 && bits > 0 && bits <= 60,
+      s"bits=$bits must be a positive multiple of 4, at most 60")
+    withDocSignature(docs, idCol, textCol, n, numHashes, bits, Nil)
+      .select(col(idCol), col("_ds.sig").as("sig"),
+        col("_ds.simhash").as("simhash"))
+  }
+
+  /** (idCol, passthroughCols..., `_ds` struct<sig, simhash>) — the
+    * shared in-row construction: shingle lambda → array_distinct →
+    * [[graft.plans.DocSignature]]. `bits = 0` skips the simhash digest.
+    */
+  private def withDocSignature(docs: DataFrame, idCol: String,
+                               textCol: String, n: Int, numHashes: Int,
+                               bits: Int,
+                               passthroughCols: Seq[String]): DataFrame = {
     graft.plans.GraftExpressions.register(docs.sparkSession)
     val shingleExpr = s"transform(sequence(1, size(_toks) - ${n - 1}), " +
       s"i -> concat_ws(' ', ${(0 until n).map(k => s"_toks[i + ${k - 1}]").mkString(", ")}))"
@@ -170,10 +198,9 @@ object Dedup {
         split(col(textCol), " ").as("_toks"): _*)
       .where(size(col("_toks")) >= n)
       .select(col(idCol) +: passthroughCols.map(col) :+
-        expr(s"aggregate(array_distinct($shingleExpr), " +
-          s"array_repeat(9223372036854775807L, $numHashes), " +
-          s"(acc, s) -> zip_with(acc, graft_md5_seed_hashes(s, $numHashes), " +
-          "(a, b) -> least(a, b)))").as("sig"): _*)
+        graft.plans.GraftExpressions.docSignature(
+          expr(s"array_distinct($shingleExpr)"), lit(numHashes), lit(bits))
+          .as("_ds"): _*)
   }
 
   /** Streaming near-dup gate: band the in-row signatures and join
@@ -705,28 +732,7 @@ object Dedup {
       when(col(s"_t$j") > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
     val aggs = minCols ++ votes
-    if (fusedAggEnabled) {
-      // Single-buffer typed Aggregator path (see [[FusedSigAgg]]): same
-      // native hash inputs, one ObjectHashAggregate state instead of a
-      // 68-column hash-aggregate row. Values are bit-identical
-      // (spec-pinned). MEASURED SLOWER at bench scale (sf0.1 idle box,
-      // median-of-3: dedup_provenance_clusters 5.15s vs 4.45s
-      // relational): the UDAF is opaque to Catalyst, so the unpersisted
-      // fan-out in the provenance capstone can no longer prune the
-      // aggregate per consumer — both branches pay the full 68-wide
-      // state — while the relational form's 68 columns are codegen'd
-      // and prune to 8 (minhash branch) / 60 (simhash branch). Default
-      // stays relational; the switch preserves the measurement.
-      val fusedUdaf = org.apache.spark.sql.functions.udaf(
-        new FusedSigAgg(numHashes, bits),
-        ExpressionEncoder[(Seq[Long], Long)]())
-      shingleDf
-        .select(col(idCol), mh.as("_mh"), sh.as("_sh"))
-        .groupBy(col(idCol))
-        .agg(fusedUdaf(col("_mh"), col("_sh")).as("_f"))
-        .select(col(idCol), col("_f.sig").as("sig"),
-          col("_f.simhash").as("simhash"))
-    } else shingleDf
+    shingleDf
       .select(col(idCol), mh.as("_mh"), sh.as("_sh"))
       .groupBy(col(idCol))
       .agg(aggs.head, aggs.tail: _*)
@@ -734,16 +740,6 @@ object Dedup {
         array((0 until numHashes).map(j => col(s"_m$j")): _*).as("sig"),
         assembled.as("simhash"))
   }
-
-  /** Switch for [[fusedSignatures]]' aggregation plumbing: default is the
-    * relational 68-column hash aggregate; set `graft.dedup.fusedAgg`
-    * (or GRAFT_FUSED_AGG) to use the [[FusedSigAgg]] single-buffer
-    * Aggregator. Values are identical either way.
-    */
-  private def fusedAggEnabled: Boolean =
-    sys.props.get("graft.dedup.fusedAgg")
-      .orElse(sys.env.get("GRAFT_FUSED_AGG"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003 —
     * the MOSS algorithm): hash every token k-gram, then keep the MINIMUM
@@ -1443,5 +1439,35 @@ object Dedup {
         graft.plans.GraftExpressions.cosine(col("_va"), col("_vb")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
+  }
+
+  /** The provenance-tagged edge union (id_a, id_b, src) over every
+    * near-dup detector: exact md5 ∪ banded MinHash ∪ Manku-blocked
+    * SimHash ∪ cell-gated embedding cosine, src ∈ {exact, minhash,
+    * simhash, cosine} — the input of
+    * [[Components.provenanceClusters]]. `sigs` is a signature frame
+    * (idCol, sig, simhash) over `docs` ([[docSignatures]] or
+    * [[fusedSignatures]]); it feeds two detectors, so the caller decides
+    * whether to persist it. Embedding ids share idCol's domain.
+    */
+  def provenanceEdges(docs: DataFrame, idCol: String, textCol: String,
+                      sigs: DataFrame, emb: DataFrame, embIdCol: String,
+                      arrCol: String, centersLong: DataFrame,
+                      centerCol: String,
+                      cosineThreshold: Double): DataFrame = {
+    def tagged(pairs: DataFrame, src: String): DataFrame =
+      pairs.select(col("id_a"), col("id_b"), lit(src).as("src"))
+    val hashed = docs.select(col(idCol), md5(col(textCol)).as("_h"))
+    val exact = hashed.select(col(idCol).as("id_a"), col("_h"))
+      .join(hashed.select(col(idCol).as("id_b"), col("_h")), "_h")
+      .where(col("id_a") < col("id_b"))
+    val near = minhashBandCandidates(sigs.select(col(idCol),
+      posexplode(col("sig")).as(Seq("h", "minhash"))), idCol)
+    val sim = simhashPairsBlocked(sigs.select(col(idCol), col("simhash")),
+      idCol, maxHamming = 3, bits = 60)
+    val cos = embeddingNearDupCells(emb, embIdCol, arrCol, centersLong,
+      centerCol, cosineThreshold)
+    tagged(exact, "exact").unionByName(tagged(near, "minhash"))
+      .unionByName(tagged(sim, "simhash")).unionByName(tagged(cos, "cosine"))
   }
 }

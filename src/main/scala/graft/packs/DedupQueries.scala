@@ -46,6 +46,27 @@ object DedupQueries extends QueryPack {
       .groupBy(col("label").as("cell"), col("dim"))
       .agg(avg(col("v")).as("c"))
 
+  // The tagged edge union of dedup_provenance_clusters — built by the
+  // same Dedup.provenanceEdges as Graft.dedupCorpusProvenance, and
+  // exposed so PlanSpec can check its plan before the edge checkpoint
+  // hides it. The fused signature operator stays UNPERSISTED here on
+  // purpose: Catalyst prunes the fused aggregate per consumer (minhash
+  // branch keeps the 8 mins, simhash branch the 60 votes), so this
+  // degrades into two pruned parallel passes — measured fastest at
+  // bench scale (1.4s vs 2.2s separate / 1.7s checkpointed). The
+  // deployment path that must not scan a 100 TB corpus twice is
+  // Graft.dedupCorpusProvenance, which persists in-row signatures
+  // instead. Cosine edges are SemDeDup cell-gated — no quadratic
+  // operator in the capstone plan (the exact all-pairs twin stays in
+  // dedup_embedding_cosine); deterministic, so the oracle mirrors the
+  // same cell assignment.
+  private[graft] def provenanceEdges(s: SparkSession, dir: String): DataFrame =
+    Dedup.provenanceEdges(Tables(s, dir).documents, "doc_id", "text",
+      Dedup.fusedSignatures(docShingles(s, dir), "doc_id", numHashes = 8,
+        bits = 60),
+      Tables(s, dir).embeddings, "vec_id", "embedding", labelCenters(s, dir),
+      "cell", cosineThreshold = 0.45)
+
   // Shared oracle CTE: distinct word-trigram shingles (relational 3-way
   // join formulation — intentionally a different algorithm than the Spark
   // array-lambda, same semantics).
@@ -440,40 +461,7 @@ object DedupQueries extends QueryPack {
     // per-cluster provenance (which detectors fired). The full-corpus
     // answer to "is this a duplicate, and says who".
     "dedup_provenance_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val hashed = docs.select(col("doc_id"), md5(col("text")).as("_h"))
-      val exact = hashed.select(col("doc_id").as("id_a"), col("_h"))
-        .join(hashed.select(col("doc_id").as("id_b"), col("_h")), "_h")
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit("exact").as("src"))
-      // Fused signature operator, UNPERSISTED here on purpose: Catalyst
-      // prunes the fused aggregate per consumer (minhash branch keeps the
-      // 8 mins, simhash branch the 60 votes), so this degrades into two
-      // pruned parallel passes — measured fastest at bench scale (1.4s vs
-      // 2.2s separate / 1.7s checkpointed). The deployment path that must
-      // not scan a 100 TB corpus twice is Graft.dedupCorpusProvenance,
-      // which persists the fused output instead.
-      val fused = Dedup.fusedSignatures(docShingles(s, dir), "doc_id",
-        numHashes = 8, bits = 60)
-      val near = Dedup.minhashBandCandidates(
-          fused.select(col("doc_id"),
-            posexplode(col("sig")).as(Seq("h", "minhash"))),
-          "doc_id", rowsPerBand = 2)
-        .select(col("id_a"), col("id_b"), lit("minhash").as("src"))
-      val sim = Dedup.simhashPairsBlocked(
-          fused.select(col("doc_id"), col("simhash")),
-          "doc_id", maxHamming = 3, bits = 60)
-        .select(col("id_a"), col("id_b"), lit("simhash").as("src"))
-      // SemDeDup cell-gated cosine edges — no quadratic operator in the
-      // capstone plan (the exact all-pairs twin stays in
-      // dedup_embedding_cosine). Deterministic, so the oracle mirrors
-      // the same cell assignment; cross-cell pairs forgone by design.
-      val cos = Dedup.embeddingNearDupCells(Tables(s, dir).embeddings,
-          "vec_id", "embedding", labelCenters(s, dir), "cell",
-          threshold = 0.45)
-        .select(col("id_a"), col("id_b"), lit("cosine").as("src"))
-      Components.provenanceClusters(
-          exact.unionByName(near).unionByName(sim).unionByName(cos))
+      Components.provenanceClusters(provenanceEdges(s, dir))
         .select(col("id").as("doc_id"), col("comp").as("component"),
           col("is_survivor"), col("cluster_size"), col("sources"))
         .orderBy(col("doc_id"))

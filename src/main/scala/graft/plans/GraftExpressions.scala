@@ -50,6 +50,12 @@ object GraftExpressions {
     Md5PrefixLong(children.head, children(1))
   }
 
+  private def docSignatureBuilder(children: Seq[Expression]): Expression = {
+    require(children.size == 3,
+      "graft_doc_signature expects (shingles, num_hashes, bits)")
+    DocSignature(children(0), children(1), children(2))
+  }
+
   private def sortedOverlapBuilder(children: Seq[Expression]): Expression = {
     require(children.size == 3,
       "graft_sorted_overlap expects (array_a, array_b, required)")
@@ -105,6 +111,8 @@ object GraftExpressions {
       registry.createOrReplaceTempFunction(
         "graft_md5_prefix_long", md5PrefixBuilder, "built-in")
       registry.createOrReplaceTempFunction(
+        "graft_doc_signature", docSignatureBuilder, "built-in")
+      registry.createOrReplaceTempFunction(
         "graft_bloom_agg", bloomAggBuilder, "built-in")
       registry.createOrReplaceTempFunction(
         "graft_bloom_might_contain", bloomMightContainBuilder, "built-in")
@@ -125,6 +133,8 @@ object GraftExpressions {
     call_function("graft_md5_seed_hashes", c, n)
   def md5PrefixLong(c: Column, n: Column): Column =
     call_function("graft_md5_prefix_long", c, n)
+  def docSignature(shingles: Column, numHashes: Column, bits: Column): Column =
+    call_function("graft_doc_signature", shingles, numHashes, bits)
   def bloomAgg(hashed: Column, estItems: Column, numBits: Column): Column =
     call_function("graft_bloom_agg", hashed, estItems, numBits)
   def bloomMightContain(bloom: Column, hashed: Column): Column =
@@ -195,6 +205,15 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 2,
           "graft_md5_prefix_long expects exactly 2 arguments")
         Md5PrefixLong(children.head, children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_doc_signature"),
+      new ExpressionInfo(classOf[DocSignature].getName,
+        "graft_doc_signature"),
+      (children: Seq[Expression]) => {
+        require(children.size == 3,
+          "graft_doc_signature expects (shingles, num_hashes, bits)")
+        DocSignature(children(0), children(1), children(2))
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_sorted_overlap"),

@@ -3,6 +3,7 @@ package graft.plans
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -98,20 +99,29 @@ object Md5Hashing {
     * long array (codegen entry point — keep the signature Java-simple).
     */
   def seedHashes(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.getBytes
-    val md = digest.get()
     val out = new Array[Long](n)
+    java.util.Arrays.fill(out, Long.MaxValue)
+    minSeedHashes(s.getBytes, out)
+    ArrayData.toArrayData(out)
+  }
+
+  /** Fold the seeded hashes of `bytes` into the running minima `mins`
+    * (one hash per slot) — the minhash inner loop shared by
+    * [[seedHashes]] and [[docSignature]].
+    */
+  private def minSeedHashes(bytes: Array[Byte], mins: Array[Long]): Unit = {
+    val md = digest.get()
     var h = 0
-    while (h < n) {
+    while (h < mins.length) {
       md.reset()
       md.update(prefix(h))
       md.update(bytes)
       val d = md.digest()
-      out(h) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+      val v = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
         ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      if (v < mins(h)) mins(h) = v
       h += 1
     }
-    ArrayData.toArrayData(out)
   }
 
   /** First `nHex` hex digits of md5(s) as an unsigned long (codegen
@@ -121,9 +131,13 @@ object Md5Hashing {
     */
   def prefixLong(s: UTF8String, nHex: Int): Long = {
     require(nHex >= 1 && nHex <= 15, s"nHex=$nHex must be in 1..15")
+    prefixOf(s.getBytes, nHex)
+  }
+
+  private def prefixOf(bytes: Array[Byte], nHex: Int): Long = {
     val md = digest.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    val d = md.digest(bytes)
     var v = 0L
     var i = 0
     while (i < nHex) {
@@ -132,5 +146,42 @@ object Md5Hashing {
       i += 1
     }
     v
+  }
+
+  /** [[DocSignature]]'s eval (codegen entry point): the minhash minima
+    * of every shingle's seed family and the `bits`-wide simhash majority
+    * vote over every shingle's md5 prefix, as one (sig, simhash) row.
+    * The vote is the aggregated form's `sum(±1) > 0` rule per bit.
+    */
+  def docSignature(shingles: ArrayData, n: Int, bits: Int): InternalRow = {
+    require(bits == 0 || (bits % 4 == 0 && bits <= 60),
+      s"bits=$bits must be 0 or a positive multiple of 4, at most 60")
+    val mins = new Array[Long](n)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    val tally = new Array[Int](bits)
+    val m = shingles.numElements()
+    var i = 0
+    while (i < m) {
+      if (!shingles.isNullAt(i)) {
+        val bytes = shingles.getUTF8String(i).getBytes
+        minSeedHashes(bytes, mins)
+        if (bits > 0) {
+          val h = prefixOf(bytes, bits / 4)
+          var j = 0
+          while (j < bits) {
+            tally(j) += (if ((h & (1L << j)) != 0L) 1 else -1)
+            j += 1
+          }
+        }
+      }
+      i += 1
+    }
+    var simhash = 0L
+    var j = 0
+    while (j < bits) {
+      if (tally(j) > 0) simhash |= 1L << j
+      j += 1
+    }
+    InternalRow(ArrayData.toArrayData(mins), simhash)
   }
 }

@@ -54,9 +54,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val sh = Dedup.shingles(corpus, "doc_id", "text")
-    val fused = Dedup.fusedSignatures(sh, "doc_id", numHashes = 8, bits = 60)
-      .as[(Long, Seq[Long], Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
+    def sigMap(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Seq[Long], Long)].collect()
+        .map(r => r._1 -> (r._2, r._3)).toMap
+    val fused = sigMap(
+      Dedup.fusedSignatures(sh, "doc_id", numHashes = 8, bits = 60))
+    // the in-row kernel path (no explode, no aggregate) — same values
+    val inRow = sigMap(
+      Dedup.docSignatures(corpus, "doc_id", "text", numHashes = 8, bits = 60))
+    assert(inRow === fused)
     val minAgg = Dedup.minhashSignatures(sh, "doc_id", numHashes = 8)
       .as[(Long, Int, Long)].collect()
       .groupBy(_._1).view
@@ -68,26 +74,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(sig === minAgg(id), s"minhash doc $id")
       assert(sh60 === simAgg(id), s"simhash doc $id")
     }
-  }
-
-  test("FusedSigAgg single-buffer path is bit-identical to the relational fused form") {
-    val corpus = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val sh = Dedup.shingles(corpus, "doc_id", "text").localCheckpoint()
-    def run() = Dedup.fusedSignatures(sh, "doc_id", numHashes = 8, bits = 60)
-      .as[(Long, Seq[Long], Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    val relational = run()
-    System.setProperty("graft.dedup.fusedAgg", "1")
-    try {
-      val viaAgg = run()
-      assert(viaAgg.keySet === relational.keySet)
-      viaAgg.foreach { case (id, (sig, s60)) =>
-        assert(sig === relational(id)._1, s"minhash doc $id")
-        assert(s60 === relational(id)._2, s"simhash doc $id")
-      }
-    } finally System.clearProperty("graft.dedup.fusedAgg")
   }
 
   test("facade fused family matches the single-detector derivations") {
@@ -561,6 +547,45 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert((1L to 40L).forall(viaDriver(_) == 1L))
     assert(viaDriver(100L) == 51L && (51L to 60L).forall(viaDriver(_) == 51L))
     assert(Seq(200L, 201L, 202L).forall(viaDriver(_) == 200L))
+  }
+
+  test("provenanceClusters: driver-side path ≡ distributed path") {
+    // Below driverUfThreshold tagged edges the clusters, sizes and
+    // sources are resolved on the driver; pin every column against the
+    // distributed path on a chain (pointer jumping), a star whose min id
+    // is a leaf, clusters reached by two detectors, a duplicated edge
+    // under one tag, and a null tag.
+    import graft.dedup.Components
+    val tagged =
+      (1L to 30L).sliding(2).map(s => (s.head, s.last, "minhash")).toSeq ++
+        Seq((5L, 6L, "exact"), (5L, 6L, "exact")) ++ // chain: 2 detectors
+        (51L to 60L).map(i => (100L, i, "cosine")) ++ // star, min = leaf 51
+        Seq((100L, 55L, "simhash")) ++
+        Seq((200L, 201L, "exact"), (201L, 202L, null)) // null tag
+    val edges = tagged.toDF("id_a", "id_b", "src")
+    def run(): Map[Long, (Long, Long, Int, Long, String)] = {
+      val df = Components.provenanceClusters(edges)
+      assert(df.schema.map(_.dataType.simpleString) ===
+        Seq("bigint", "bigint", "int", "bigint", "string"))
+      df.as[(Long, Long, Int, Long, String)].collect()
+        .map(r => r._1 -> r).toMap
+    }
+    val viaDriver = run() // default threshold >> |edges|: driver path
+    val key = "graft.components.driverUfThreshold"
+    val prev = sys.props.put(key, "0") // force the distributed path
+    val viaLoop =
+      try run()
+      finally prev match {
+        case Some(v) => sys.props.put(key, v): Unit
+        case None => sys.props.remove(key): Unit
+      }
+    assert(viaDriver === viaLoop)
+    assert(viaDriver(17L) === ((17L, 1L, 0, 30L, "exact,minhash")))
+    assert(viaDriver(1L) === ((1L, 1L, 1, 30L, "exact,minhash")))
+    assert(viaDriver(100L) === ((100L, 51L, 0, 11L, "cosine,simhash")))
+    assert(viaDriver(51L)._3 === 1)
+    assert(viaDriver(202L) === ((202L, 200L, 0, 3L, "exact")))
+    assert(viaDriver.size === 30 + 11 + 3)
   }
 
   test("connectedComponentsAll gives isolated nodes singleton components") {

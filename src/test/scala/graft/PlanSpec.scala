@@ -113,10 +113,16 @@ class PlanSpec extends AnyFunSuite {
     assert(caps.contains("TakeOrderedAndProject"), caps.take(800))
     // all-sources provenance clusters: equi-joins ONLY — the cosine edge
     // source is the SemDeDup cell-gated path, so no cartesian product and
-    // no nested-loop join anywhere in the capstone
-    val prov = plan("dedup_provenance_clusters")
+    // no nested-loop join anywhere in the capstone. Checked on the
+    // tagged-edge union itself (the query's own plan starts at the eager
+    // edge checkpoint's scan, where no detector is visible); the native
+    // cosine proves the detector subtree is really in the checked plan.
+    val prov = graft.packs.DedupQueries.provenanceEdges(spark, sf)
+      .queryExecution.executedPlan.toString
     assert(!prov.contains("CartesianProduct") &&
       !prov.contains("BroadcastNestedLoopJoin"), prov.take(600))
+    assert(prov.contains("graft_cosine"),
+      "native cosine missing from the provenance edge union plan")
     // the standalone cell-gated cosine near-dup: same property
     val cells = plan("dedup_embedding_cosine_cells")
     assert(!cells.contains("CartesianProduct") &&
