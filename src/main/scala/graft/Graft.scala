@@ -268,8 +268,8 @@ object Graft {
     // provenanceClusters eagerly localCheckpoints the edge set, so the
     // signature cache has served its purpose — release it rather than
     // letting repeated calls accumulate cached signature tables for the
-    // session's lifetime
-    sigs.unpersist()
+    // session's lifetime; blocking, so no block removal outlives the call
+    sigs.unpersist(blocking = true)
     clusters
   }
   /** Hourly resample with dense grid + forward fill (time-series

@@ -400,14 +400,18 @@ object Components {
     // four-detector union up to 5x. Eager = one detector pass; the
     // truncated lineage also shrinks every later consumer's task binary
     // to a LogicalRDD scan. The edge count rides the same job (observe),
-    // so choosing the driver path costs no extra job.
-    val obs = org.apache.spark.sql.Observation()
-    val edges = edgesProv
-      .observe(obs, count(lit(1)).as("n"))
+    // so choosing the driver path costs no extra job. It is read from
+    // the checkpoint's own executed plan, whose metrics are final when
+    // the eager job returns — an Observation would instead wait for the
+    // asynchronous listener bus to deliver the query's end event.
+    val counted = edgesProv.observe("graft_edge_count", count(lit(1)).as("n"))
+    val edges = counted
       .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
-    if (obs.get("n").asInstanceOf[Long] < driverUfThreshold) {
+    val nEdges = counted.queryExecution.observedMetrics("graft_edge_count")
+      .getLong(0)
+    if (nEdges < driverUfThreshold) {
       val out = driverProvenance(edges)
-      checkpointRdd(edges).foreach(_.unpersist(blocking = false))
+      checkpointRdd(edges).foreach(_.unpersist(blocking = true))
       return out
     }
     // Blocks land at the AQE-coalesced width and Caches.release frees
